@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query bench isolation harness (round 18, VERDICT task 1): the
   * exact Bench session + noop-sink protocol for a NAMED subset of the
   * registry, with per-run whole-stage-codegen compile accounting read
@@ -17,35 +15,13 @@ import org.apache.spark.sql.SparkSession
   * for each run the codegen compile-time delta (ms) and
   * generated-class-count delta, so "the query is slow" separates into
   * "the query recompiles every run" (codegen-cache thrash — its own
-  * stage count exceeds spark.sql.codegen cache capacity) vs "the work
-  * itself grew".
+  * stage count exceeds [[GraftSession.CodegenCacheEntries]]) vs "the
+  * work itself grew".
   */
 object BenchFocus {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    GraftSession.quietStartup()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (128L * 1024 * 1024).toString)
-      // Whole-stage-codegen class-cache capacity (STATIC conf, Spark
-      // default 100). Default matches Bench's round-18 setting so focus
-      // numbers stay comparable; override to 100 to reproduce the
-      // capacity-thrash diagnosis (recompiles → 0 with a big cache =
-      // capacity; unchanged = sources genuinely differ per run).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      // mirror Bench's AQE coalescing knob so focus A/Bs are comparable
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PFIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forData(sfDir).getOrCreate()
 
     // Spark's codegen source is a singleton object with codahale
     // counters; METRIC_COMPILATION_TIME is a Histogram whose COUNT is
@@ -60,20 +36,12 @@ object BenchFocus {
       (h.getSnapshot.getMean * h.getCount / 1e0).toLong
     }
 
-    // Optional session-speed anchor: the same registry-independent
-    // canary Bench times first, so a focus run's numbers can be
-    // compared against a committed record's canary ratio.
+    // Optional session-speed anchor: the same canary Bench times
+    // first, so a focus run's numbers can be compared against a
+    // committed record's canary ratio.
     if (sys.env.contains("SPARK_GRAFT_FOCUS_CANARY")) {
-      def canaryOnce(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, cpus)
-          .selectExpr("xxhash64(id) % 1000000 as k")
-          .groupBy("k").count()
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = canaryOnce()
-      val warm = math.min(canaryOnce(), canaryOnce())
+      val cold = Bench.canary(spark)
+      val warm = math.min(Bench.canary(spark), Bench.canary(spark))
       println(f"[focus] canary cold $cold%.2f s warm $warm%.2f s")
     }
 
@@ -81,11 +49,7 @@ object BenchFocus {
       val fn = SparkEntry.queries(q)
       def once(tag: String): Double = {
         val (c0, k0, t0ms) = (compCount, classCount, compTimeMs)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        val secs = Bench.timeQuery(spark)(fn(spark, sfDir))
         println(f"[focus] $q $tag ${secs}%.2f s  codegen: +${compCount - c0} compiles " +
           f"(+${compTimeMs - t0ms} ms est) +${classCount - k0} classes")
         secs

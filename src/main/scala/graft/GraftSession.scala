@@ -37,77 +37,108 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Recommended session builder for the engine: shuffle parallelism
-  * matched to cores (not the 200 default), AQE with skew handling, UTC,
-  * and the graft extensions. This is the user-facing entry point; the
-  * driver-run mains (Verify/Bench) configure equivalently.
+/** The engine's one session profile. Every session — a user's, the
+  * mains', the benchmark's and the shared test session —
+  * comes from [[GraftSession.builder]], so the session that is
+  * measured is the session that users get, and [[GraftExtensions]] is
+  * the only path that registers graft's functions and optimizer rules.
   */
 object GraftSession {
-  /** Apply graft's optimizer rules to an already-built session — the
-    * driver-run mains (Verify/Bench/plan dumps) and the shared test
-    * session create plain sessions, so they opt in here; sessions
-    * built through [[GraftExtensions]] get the same rules via
-    * injectOptimizerRule. Idempotent. */
-  def applyOptimizations(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(plans.RewriteDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.RewriteDotProduct
+  /** Whole-stage-codegen class-cache capacity (static conf; Spark's
+    * default is 100 entries). Measured in round 18 via BenchFocus and
+    * CodegenMetrics: several registered pipelines alone compile ~100+
+    * units (dedup_semantic_coarse 126 pre-rewrite, sim_pq_train 153
+    * before its r18 fusing), so a query bigger than the cache EVICTS
+    * ITS OWN generated classes mid-run and re-pays Janino on every
+    * execution ("warm" structurally impossible; dedup_clusters
+    * re-compiled 66 units per warm run, dedup_semantic_coarse 87).
+    * 2000 entries hold the working set of adjacent queries in the
+    * 313-query session for tens of MB of driver memory. Not a
+    * local-mode tune: the compile cache lives on the driver at any
+    * cluster size and the number of distinct plan shapes is
+    * scale-independent. Measured (BenchFocus, warm-min, 100 → 2000
+    * entries): dedup_clusters 2.72 → 2.22 s (66 → 0 recompiles/run),
+    * dedup_semantic_coarse 4.23 → 2.46, dedup_apply 3.53 → 2.16,
+    * stats_mad_outliers 2.08 → 1.81. */
+  val CodegenCacheEntries = 2000
 
-  /** Quiet the benign-but-flooding log categories in the driver-run
-    * mains: `WindowExec`'s "No Partition Defined" warning fires on
-    * every metadata-sized global window (quantile-literal relations,
-    * ≤k-row model tables — each site's bounded-cardinality argument is
-    * in PLANS.md), and `SimpleFunctionRegistry` warns "replaced a
-    * previously registered function" every time a fresh session
-    * re-registers graft's extension functions — both drown the
-    * harness's ~2000-char output tail in dozens of identical lines per
-    * run. Opt-in from mains only: user sessions keep default logging,
-    * so a REAL unpartitioned window over fact data still warns where
-    * it matters. */
-  def quietBenignLogs(): Unit =
+  /** The engine's session profile: shuffle partitions from the cores
+    * `master` names and the bytes under `dataDir` (empty or missing →
+    * the cores default, see [[shufflePartitions]]), the 128 MB AQE
+    * advisory size (post-shuffle target: reducers neither starve nor
+    * spill), the 2000-entry codegen cache, UTC, and
+    * [[GraftExtensions]]. Anything set on the returned builder
+    * overrides the profile. */
+  def builder(master: String = "local[*]", dataDir: String = ""): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions",
+        shufflePartitions(masterCores(master), dirBytes(dataDir)).toString)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (128L * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+
+  /** Cores a master string names: N for `local[N]` / `local[N,F]`, 1
+    * for `local`; `local[*]` and non-local masters fall back to this
+    * machine's processors. */
+  def masterCores(master: String): Int = {
+    val LocalN = """local\[(\d+)(?:,\d+)?\]""".r
+    master match {
+      case LocalN(n) => n.toInt
+      case "local" => 1
+      case _ => Runtime.getRuntime.availableProcessors()
+    }
+  }
+
+  /** `SPARK_GRAFT_CPUS`, read once: the `local[N]` width of the
+    * mains (default: this machine's processors). */
+  lazy val mainCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The mains' session (Verify, Bench, …): the profile at
+    * `local[SPARK_GRAFT_CPUS]`, partitions sized from `sfDir`, and the
+    * mains' log quieting ([[quietMainLogs]]) applied before the session
+    * starts. */
+  def forData(sfDir: String): SparkSession.Builder = {
+    quietMainLogs()
+    builder(s"local[$mainCores]", sfDir)
+  }
+
+  /** Log quieting for the mains, applied before the session
+    * starts. The mains are stdout-silent and a harness captures only the
+    * ~2000-char tail of their output, so benign-but-flooding lines would
+    * bury the result JSON:
+    *  - root WARN: session creation logs INFO (BlockManager/SharedState).
+    *    The load-bearing half is `log4j2.properties` (root=WARN: a real
+    *    config file keeps Spark's `Logging.initializeLogging` from
+    *    installing its INFO-rooted defaults); this is the half for
+    *    environments where that resource is shadowed.
+    *  - `WindowExec`'s "No Partition Defined" on every metadata-sized
+    *    global window (quantile-literal relations, ≤k-row model tables —
+    *    each site's bounded-cardinality argument is in PLANS.md) and
+    *    `SimpleFunctionRegistry`'s "replaced a previously registered
+    *    function" whenever graft's functions are re-registered.
+    *  - the plan-toString truncation advisories: with 300+ registered
+    *    queries some analyzed plans exceed the 25-field budget by design.
+    *  - DAGScheduler's "Broadcasting large task binary" (most stages at
+    *    local[32] with broadcast dims) and MapPartitionsRDD's "RDD ...
+    *    was locally checkpointed" when [[Bench.timeQuery]] drops a run's
+    *    checkpoint blocks (benign: every run re-materializes its own).
+    * Mains only: user sessions keep default logging, so a REAL
+    * unpartitioned window over fact data still warns where it matters. */
+  private def quietMainLogs(): Unit =
     try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
+      import org.apache.logging.log4j.Level
+      import org.apache.logging.log4j.core.config.Configurator
+      Configurator.setRootLevel(Level.WARN)
+      Seq("org.apache.spark.sql.execution.window",
         "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-        org.apache.logging.log4j.Level.ERROR)
-      // DAGScheduler's "Broadcasting large task binary" WARN fires for
-      // every stage whose serialized closure tops 1 MiB — at local[32]
-      // with broadcast dims that is most stages, and it floods the
-      // captured bench tail. MapPartitionsRDD warns "RDD ... was locally
-      // checkpointed" when Bench's eager per-run unpersist (deliberate —
-      // see Bench.once) drops checkpoint blocks; benign by construction
-      // because every invocation re-materializes its own.
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-    } catch { case _: Throwable => () }
-
-  /** Startup quieting for the driver-run mains (round 15, VERDICT
-    * task 5): session CREATION logs INFO (BlockManager/SharedState)
-    * before `setLogLevel("WARN")` can run, and because the mains are
-    * otherwise stdout-silent those startup lines land inside the
-    * harness's captured output tail right before the result JSON.
-    * The load-bearing half of the fix is `src/main/resources/
-    * log4j2.properties` (root=WARN): with a real config file on the
-    * classpath, Spark's `Logging.initializeLogging` sees log4j2 as
-    * user-configured and never installs its INFO-rooted defaults, so
-    * the startup lines are filtered from the first message. This
-    * method is the belt-and-braces half for environments where that
-    * resource is shadowed: call BEFORE `getOrCreate()`. It also
-    * raises SparkStringUtils' "Truncated the string representation of
-    * a plan" WARN to ERROR: with 300+ registered queries some
-    * analyzed plans exceed the default 25-field toString budget by
-    * design, and the advisory fires once per session run. */
-  def quietStartup(): Unit =
-    try {
-      org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-        org.apache.logging.log4j.Level.WARN)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.util.SparkStringUtils", org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.util.StringUtils", org.apache.logging.log4j.Level.ERROR)
+        "org.apache.spark.util.SparkStringUtils",
+        "org.apache.spark.sql.catalyst.util.StringUtils",
+        "org.apache.spark.scheduler.DAGScheduler",
+        "org.apache.spark.rdd.MapPartitionsRDD")
+        .foreach(Configurator.setLevel(_, Level.ERROR))
     } catch { case _: Throwable => () }
 
   /** Shuffle sizing for every graft session — SCALE-AWARE since
@@ -132,34 +163,34 @@ object GraftSession {
     * capped at 4× cores (the measured-good sf100 value). Callers that
     * know their data directory pass [[dirBytes]]; callers that don't
     * (generic [[builder]]) get the cores default, which is correct
-    * for everything up to ~decade-2 corpora on a 32-core box.
-    * `SPARK_GRAFT_SHUFFLE` remains the explicit override. */
-  def shufflePartitions(cores: Int, inputBytes: Long = 0L): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse {
-      val byBytes = math.ceil(inputBytes / (128.0 * 1024 * 1024)).toInt
-      // Small-input floor (round 19, r18 VERDICT task 5): the old lower
-      // bound was CORES — a core-count constant, so a 17 MB corpus got
-      // 32 reduce partitions on local[32] and every iterative family
-      // paid 32 near-empty tasks per round (the driver's 8-core r18 run
-      // beat its 32-core run by 14% on exactly this). The small end is
-      // now INPUT-DERIVED: ~2 MB of source data per reduce task, capped
-      // by cores — measured at sf0.1/32 cores (OPTIMIZATION_r19.md
-      // task 5): dedup_semantic 3.36 → 2.02 s, dedup_semantic_coarse
-      // 4.31 → 2.31, sim_pq_train 2.94 → 2.00, graph_pagerank 2.51 →
-      // 1.66, with the CPU-heavy shingle/window family flat (8
-      // partitions keep 8-way parallelism; the rejected
-      // parallelismFirst=false blanket collapsed those to 1 and lost
-      // 2.7×). The bound never binds once inputs can feed the cores
-      // (min(cores, …) saturates at ~2 MB × cores), so cluster-scale
-      // partitioning still comes from byBytes/advisory — scale-adaptive
-      // at both ends, constant at neither. bytes unknown (0) keeps the
-      // cores default.
-      val smallEnd =
-        if (inputBytes <= 0L) cores
-        else math.min(cores,
-          math.max(1, math.ceil(inputBytes / (2.0 * 1024 * 1024)).toInt))
-      math.min(math.max(smallEnd, byBytes), cores * 4)
-    }
+    * for everything up to ~decade-2 corpora on a 32-core box. A
+    * `.config("spark.sql.shuffle.partitions", …)` on the returned
+    * builder overrides the rule. */
+  def shufflePartitions(cores: Int, inputBytes: Long = 0L): Int = {
+    val byBytes = math.ceil(inputBytes / (128.0 * 1024 * 1024)).toInt
+    // Small-input floor (round 19, r18 VERDICT task 5): the old lower
+    // bound was CORES — a core-count constant, so a 17 MB corpus got
+    // 32 reduce partitions on local[32] and every iterative family
+    // paid 32 near-empty tasks per round (the 8-core r18 bench record
+    // beat its 32-core run by 14% on exactly this). The small end is
+    // now INPUT-DERIVED: ~2 MB of source data per reduce task, capped
+    // by cores — measured at sf0.1/32 cores (OPTIMIZATION_r19.md
+    // task 5): dedup_semantic 3.36 → 2.02 s, dedup_semantic_coarse
+    // 4.31 → 2.31, sim_pq_train 2.94 → 2.00, graph_pagerank 2.51 →
+    // 1.66, with the CPU-heavy shingle/window family flat (8
+    // partitions keep 8-way parallelism; the rejected
+    // parallelismFirst=false blanket collapsed those to 1 and lost
+    // 2.7×). The bound never binds once inputs can feed the cores
+    // (min(cores, …) saturates at ~2 MB × cores), so cluster-scale
+    // partitioning still comes from byBytes/advisory — scale-adaptive
+    // at both ends, constant at neither. bytes unknown (0) keeps the
+    // cores default.
+    val smallEnd =
+      if (inputBytes <= 0L) cores
+      else math.min(cores,
+        math.max(1, math.ceil(inputBytes / (2.0 * 1024 * 1024)).toInt))
+    math.min(math.max(smallEnd, byBytes), cores * 4)
+  }
 
   /** Total bytes under a data directory, via Hadoop FileSystem so the
     * probe works on HDFS/S3A paths as well as local ones; 0 on any
@@ -171,39 +202,4 @@ object GraftSession {
       val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     } catch { case _: Throwable => 0L }
-
-  def builder(master: String = "local[*]"): SparkSession.Builder = {
-    val cores = Runtime.getRuntime.availableProcessors()
-    SparkSession.builder()
-      .master(master)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions(cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-  }
-
-  /** Cluster profile for the 100 TB deployment the engine targets
-    * (1000-executor scale). Local mode ignores most of these; they
-    * document the intended knobs and are applied when a real master is
-    * passed.
-    *
-    *  - shuffle.partitions 4× cores-in-cluster: AQE coalesces down, but
-    *    the upper bound must exceed the skew split count.
-    *  - maxPartitionBytes 256 MB: scan tasks large enough to amortize
-    *    scheduling, small enough to fit columnar batches in memory.
-    *  - autoBroadcastJoinThreshold 64 MB: dims broadcast, facts never.
-    *  - adaptive.advisoryPartitionSizeInBytes 128 MB: post-shuffle
-    *    target so reducers neither starve nor spill.
-    */
-  def clusterBuilder(master: String, clusterCores: Int): SparkSession.Builder =
-    builder(master)
-      .config("spark.sql.shuffle.partitions", (clusterCores * 4).toString)
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 }

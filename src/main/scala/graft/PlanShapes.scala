@@ -19,8 +19,8 @@ import java.nio.file.{Files, Paths}
   *
   * The fingerprints are config-sensitive (partition counts, AQE
   * thresholds, data sizes feed strategy choices), so the generator
-  * pins the EXACT TestSpark session shape: local[4], 4 shuffle
-  * partitions, UTC, sf0.001.
+  * builds the EXACT TestSpark session — `GraftSession.builder("local[4]")`
+  * — over sf0.001.
   *
   * Regenerate after an intentional plan change:
   *   sbt "runMain graft.PlanShapes"         # rewrites tools/plan_shapes.json
@@ -103,13 +103,7 @@ object PlanShapes {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
+    val spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val entries = Bench.headline.toSeq.sorted.map { q =>
       s"""  "$q": "${shapeHash(spark, sfDir, q)}""""

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-point scaling harness (round 12, VERDICT task 1): time the
   * named queries at TWO scale factors in one JVM and report the
   * per-query scaling exponent α = log(t_B/t_A) / log(|B|/|A|) — the
@@ -11,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * at cluster scale.
   *
   * Protocol per (query, dir): one untimed warm run (JIT/codegen —
-  * the Bench discipline), then best-of-2 timed noop-sink runs.
+  * the Bench discipline), then best-of-2 timed noop-sink runs
+  * ([[Bench.timeQuery]]).
   * Queries run A then B back-to-back so both points share identical
   * JVM/JIT state. Output: one line per query plus a trailing JSON
   * object (committed observations land in SCALING.md).
@@ -25,21 +24,14 @@ object ScaleBench {
     val dirB = args(1)
     val ratio = args(2).toDouble
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    GraftSession.quietStartup()
     // Shuffle sizing is SCALE-AWARE per data directory (round 15):
     // each (query, dir) pair runs at the partitions the engine would
-    // use for that corpus size — cores until the input outgrows them,
-    // one partition per ~128 MB of source bytes after, capped at 4×
-    // cores (GraftSession.shufflePartitions; the round-13 sf100 spill
-    // cliff and the round-14 small-SF tax are the two measurements
-    // bounding the rule). shuffle.partitions is runtime-settable, so
-    // the per-dir value is applied in time() below; the session
-    // default here covers dirA.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(dirA)).toString)
+    // use for that corpus size (GraftSession.shufflePartitions; the
+    // round-13 sf100 spill cliff and the round-14 small-SF tax are the
+    // two measurements bounding the rule). shuffle.partitions is
+    // runtime-settable, so the per-dir value is applied in time()
+    // below; the profile's default covers dirA.
+    val spark = GraftSession.forData(dirA)
       // Make shuffle removal SYNCHRONOUS once GC surfaces the dead
       // dependency (round 15): with the default fire-and-forget
       // cleaner, decade-3 graph runs each left ~30 GiB of dead shuffle
@@ -47,15 +39,7 @@ object ScaleBench {
       // NEXT run inherited a fuller disk — graph_communities sf100
       // ENOSPC'd on garbage, not on its own live footprint.
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
 
     // Local-dir scratch bytes (sum over spark.local.dir roots) — the
     // observable the GC-between-runs loop below is accountable to. -1
@@ -81,21 +65,11 @@ object ScaleBench {
       val fn = SparkEntry.queries(name)
       // Per-dir scale-aware partitions (see session comment above).
       spark.conf.set("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(dir)).toString)
+        GraftSession.shufflePartitions(GraftSession.mainCores, GraftSession.dirBytes(dir)).toString)
       def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        // Each invocation of a checkpoint-using query materializes a
-        // FRESH localCheckpoint; the previous run's blocks are garbage
-        // that only a GC-triggered ContextCleaner pass would free.
-        // Left alone they accumulate across the warm+timed runs of
-        // every query in the session (GBs at sf10 — measured: they
-        // inflated later queries up to 8×, dedup_jaccard_prefix 8 s →
-        // 62 s at the same SF), so drop them eagerly: each run pays
-        // exactly its own materialization and nothing lingers.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        // Bench.timeQuery drops the run's own persisted/checkpointed
+        // blocks (GBs at sf10 if left to a GC-triggered cleaner).
+        val secs = Bench.timeQuery(spark)(fn(spark, dir))
         // SHUFFLE files are the other garbage class (round 14): they
         // are reaped only when ContextCleaner sees the dead
         // ShuffleDependency via driver GC, and a 64 g driver heap can

@@ -721,8 +721,9 @@ object Dedup {
       .agg(collect_set(id).as("set"), count(lit(1)).as("n"))
   }
 
-  /** Jaccard candidate stage, exposed for [[graft.PpStats]] (the
-    * FP-ratio diagnostic the 100 TB sizing rests on). */
+  /** Jaccard candidate stage, exposed for InvariantSpec's PPJoin
+    * candidate:true ratio ceilings (the FP ratio the 100 TB sizing
+    * rests on; measured ratios in SCALING.md). */
   private[graft] def jaccardPrefixCandidates(tok: DataFrame): DataFrame = {
     val t = 0.5
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("f"))
@@ -812,7 +813,8 @@ object Dedup {
     * |B| ≥ ⌈t·|A|⌉ (B must have room for the overlap). Verify is the
     * same two keyed joins + in-row array_intersect as
     * [[dedupJaccardPrefix]] — never a token-level pair explosion. */
-  /** Containment candidate stage, exposed for [[graft.PpStats]]. */
+  /** Containment candidate stage, exposed for InvariantSpec's PPJoin
+    * candidate:true ratio ceilings. */
   private[graft] def containmentCandidates(tok: DataFrame): DataFrame = {
     val t = 0.8
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("f"))
@@ -873,7 +875,8 @@ object Dedup {
     * 137:1 re-discovery arriving early). Runs [[containmentCandidates]]
     * over shingle STRINGS ranked by global (freq, string) order — the
     * one total order both engines can reproduce tie-for-tie; the
-    * production id-order variant's ratio diagnostic is graft.PpStats.
+    * production id-order variant's ratio is pinned by InvariantSpec's
+    * PPJoin candidate:true ceilings.
     *
     * Scale: an EVAL op — ground truth is Σf² over ALL shingle buckets
     * (the dedup_minhash_eval truth-stage cost class), run at gate SFs

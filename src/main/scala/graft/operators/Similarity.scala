@@ -684,15 +684,6 @@ object Similarity {
       .filter(col("arnk") <= 20).select(col("qid"), col("cid"))
   }
 
-  /** Harness hook for the nprobe recall/cost sweep (round 18, VERDICT
-    * task 3; `graft.IvfPqSweep`): the eval confusion fold over the
-    * multi-probe shortlist at an arbitrary nprobe — not registered,
-    * exists so the knob can be chosen from a measured curve instead of
-    * two points. */
-  private[graft] def ivfPqSweepPoint(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfPqEvalOn(spark, dir, ivfPqShortlistNprobe(spark, dir, nprobe))
-
   private def simAnnIvfPqNprobe(spark: SparkSession, dir: String): DataFrame =
     ivfPqRanked(spark, dir, ivfPqShortlistNprobe(spark, dir, 3))
       .orderBy(col("qid"), col("rnk"))

@@ -31,9 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * gate replica for every affected query when this rule shipped, and
   * again when the null-parity semantics landed).
   *
-  * Registered via [[graft.GraftExtensions]] (injectOptimizerRule) and
-  * added to `spark.experimental.extraOptimizations` by the Verify /
-  * Bench / plan-dump mains and the shared test session.
+  * Registered only via [[graft.GraftExtensions]] (injectOptimizerRule),
+  * which every [[graft.GraftSession.builder]] session carries; exclude
+  * it per session with `spark.sql.optimizer.excludedRules`.
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
   private def sameVar(e: Expression, v: NamedLambdaVariable): Boolean = e match {

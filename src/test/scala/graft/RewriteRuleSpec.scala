@@ -16,18 +16,30 @@ class RewriteRuleSpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   /** Run `body` against an isolated session without the rule.
-    * `newSession()` shares the SparkContext but gets fresh session
-    * state, so the shared TestSpark session's extraOptimizations are
-    * never mutated — other suites (plan-hash specs) can never observe
-    * the rule temporarily removed, even under parallel execution. The
-    * filterNot is defensive: it also holds if session-state cloning
-    * ever starts propagating the parent's extraOptimizations. */
+    * `newSession()` shares the SparkContext and the extensions (so the
+    * rule is injected there too) but gets its own conf, which excludes
+    * the rule by name — the shared TestSpark session is never mutated,
+    * so other suites (plan-hash specs) can never observe the rule
+    * removed, even under parallel execution. */
   private def withoutRule[A](body: org.apache.spark.sql.SparkSession => A): A = {
     val fresh = spark.newSession()
-    fresh.experimental.extraOptimizations =
-      fresh.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.RewriteDotProduct)
+    fresh.conf.set("spark.sql.optimizer.excludedRules",
+      graft.plans.RewriteDotProduct.ruleName)
     body(fresh)
+  }
+
+  test("the rule-free session really runs the interpreted zip_with form") {
+    // Keeps the bit-identity test below non-vacuous: were the
+    // exclusion ignored, it would compare the rule against itself.
+    for (name <- Seq("sim_rp_project", "cluster_kmeans")) {
+      val phys = withoutRule { s =>
+        SparkEntry.queries(name)(s, sf).queryExecution.executedPlan.toString
+      }
+      assert(phys.toLowerCase.contains("zip_with"),
+        s"$name: the rule-free session still rewrote the dot\n$phys")
+      assert(!phys.contains("dot_product"),
+        s"$name: dot_product present with the rule excluded\n$phys")
+    }
   }
 
   test("rewrite fires on both literal-operand and column-operand dots") {

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session across all suites (Spark startup dominates test
-  * time otherwise). */
+  * time otherwise): the engine's profile at local[4], the same session
+  * PlanShapes fingerprints. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    GraftSession.applyOptimizations(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
